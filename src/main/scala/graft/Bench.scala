@@ -124,6 +124,28 @@ object Bench {
       case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
     } + "\""
 
+  /** The bench session's confs on top of [[Sessions.engineConfs]]; the
+    * dev tools that mirror the bench (MiniBench, ProfileJobs, ...) use
+    * them too. */
+  val sessionConfs: Seq[(String, String)] = Seq(
+    // AQE off at bench scale: runtime re-planning costs ~0.5s/query in
+    // stage materialization, which dominates sub-second queries at
+    // sf0.1. On a real cluster (the 100 TB target) AQE is on — see
+    // Sessions.local.
+    "spark.sql.adaptive.enabled" -> "false",
+    // state-store instances (not data volume) dominate streaming
+    // wall-time at bench SFs — cap them; production uses the session
+    // shuffle-partition count (see Streams.drain)
+    "spark.graft.streaming.statePartitions" -> "8",
+    // HDFS-backed state store at bench SFs: with KB-scale state the
+    // per-batch store cost is pure instance overhead, and RocksDB's
+    // open + WAL/SST fsyncs per partition lose to the snapshot
+    // provider (measured r17: h-family 32-35 s RocksDB vs 23-24 s
+    // HDFS, reproduced A/B/A). Production keeps RocksDB (incremental
+    // checkpoints win once state outgrows the snapshot write) — see
+    // Streams.drain, which defaults RocksDB unless this is set.
+    "spark.graft.streaming.stateProvider" -> "hdfs")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -145,35 +167,7 @@ object Bench {
       Thread.sleep(15000)
     }
     val loadStart = loadAvg
-    val spark = Sessions.localFsConfs.foldLeft(SparkSession.builder()){
-        case (b, (k, v)) => b.config(k, v) }
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE off at bench scale: runtime re-planning costs ~0.5s/query in
-      // stage materialization, which dominates sub-second queries at
-      // sf0.1. On a real cluster (the 100 TB target) AQE is on — see
-      // Sessions.local.
-      .config("spark.sql.adaptive.enabled", "false")
-      // state-store instances (not data volume) dominate streaming
-      // wall-time at bench SFs — cap them; production uses the session
-      // shuffle-partition count (see Streams.drain)
-      .config("spark.graft.streaming.statePartitions", "8")
-      // HDFS-backed state store at bench SFs: with KB-scale state the
-      // per-batch store cost is pure instance overhead, and RocksDB's
-      // open + WAL/SST fsyncs per partition lose to the snapshot
-      // provider (measured r17: h-family 32-35 s RocksDB vs 23-24 s
-      // HDFS, reproduced A/B/A). Production keeps RocksDB (incremental
-      // checkpoints win once state outgrows the snapshot write) — see
-      // Streams.drain, which defaults RocksDB unless this is set.
-      .config("spark.graft.streaming.stateProvider", "hdfs")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // bounded-buffer typed aggregates: see Sessions.local
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.ConfSources.disableTracking(spark.sparkContext.hadoopConfiguration)
+    val spark = Sessions.engine("graft-bench", cpus, sessionConfs: _*)
     // temp-dir hygiene: reap graft_ dirs leaked by crashed earlier runs,
     // and (below, untimed, after all queries drain) this run's own roots
     TempRoots.sweepStale()

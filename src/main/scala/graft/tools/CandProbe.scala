@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Candidate-volume probe for the banded near-dup joins (m5 pHash,
@@ -14,16 +13,8 @@ import org.apache.spark.sql.functions._
   */
 object CandProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Sessions.localFsConfs.foldLeft(SparkSession.builder()){
-        case (b, (k, v)) => b.config(k, v) }
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.ConfSources.disableTracking(spark.sparkContext.hadoopConfiguration)
+    val spark = graft.Sessions.engine("graft-candprobe",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     args.foreach { dir =>
       val docs = graft.sources.Tables.documents(spark, dir)
       val sig = docs

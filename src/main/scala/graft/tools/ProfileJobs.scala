@@ -1,12 +1,18 @@
 package graft.tools
 
 import scala.collection.mutable
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Dev profiler for DRIVER-GAP analysis: runs one query and prints a
   * job timeline — per-Spark-job wall time plus the gaps BETWEEN jobs
   * (driver-side work: commit I/O, metadata walks, planning). The
   * g-family lifecycle gates spend most of their wall clock outside any
   * Spark job, which per-stage profiling (ProfileQuery) cannot see.
+  *
+  * Each rep's summary line also carries its code-generation cost:
+  * `compiles` (Janino compiles, i.e. codegen-cache misses) and
+  * `compileMs` (their summed compile time).
   *
   * `runMain graft.tools.ProfileJobs <sfDir> <queryName> [reps]`
   */
@@ -18,22 +24,8 @@ object ProfileJobs {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = if (args.length > 1) args(1) else "g41_delta_dv_update_merge"
     val reps = if (args.length > 2) args(2).toInt else 1
-    val spark = graft.Sessions.localFsConfs.foldLeft(
-      org.apache.spark.sql.SparkSession.builder()){ case (b, (k, v)) => b.config(k, v) }
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.graft.streaming.statePartitions", "8")
-      .config("spark.graft.streaming.stateProvider", "hdfs") // mirror Bench
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "131072")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.ConfSources.disableTracking(spark.sparkContext.hadoopConfiguration)
+    val spark = graft.Sessions.engine("graft-profile-jobs",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), graft.Bench.sessionConfs: _*)
     graft.TempRoots.sweepStale()
     // warmup (session/codegen/parquet-footer init)
     spark.read.parquet(s"$dir/lineitem.parquet").count()
@@ -54,10 +46,14 @@ object ProfileJobs {
 
     (1 to reps).foreach { rep =>
       jobs.synchronized(jobs.clear())
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.currentTimeMillis()
       val df = graft.SparkEntry.queries(name)(spark, dir)
       val n = df.count()
       val t1 = System.currentTimeMillis()
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileMs = (CodeGenerator.compileTime - compileNs0) / 1000000L
       // listener bus is async; let it drain
       Thread.sleep(300)
       val js = jobs.synchronized(jobs.values.toVector.sortBy(_.start))
@@ -73,7 +69,8 @@ object ProfileJobs {
       }
       val tailGap = math.max(0L, t1 - prevEnd)
       println(s"== $name rep $rep rows=$n total=${t1 - t0} ms " +
-        s"jobs=${js.size} jobWall=$jobMs ms gaps=${gapMs + tailGap} ms (tail=$tailGap)")
+        s"jobs=${js.size} jobWall=$jobMs ms gaps=${gapMs + tailGap} ms (tail=$tailGap) " +
+        s"compiles=$compiles compileMs=$compileMs")
       if (sys.env.get("GRAFT_PROFILE_JOBS_VERBOSE").exists(_ == "1"))
         lines.foreach(println)
       else {

@@ -10,21 +10,8 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = if (args.length > 1) args(1) else "d5_embed_neardup"
-    val spark = graft.Sessions.localFsConfs.foldLeft(
-      org.apache.spark.sql.SparkSession.builder()){ case (b, (k, v)) => b.config(k, v) }
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // match the engine sessions (see Sessions.local); override via
-      // env to A/B a conf hypothesis
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("GRAFT_OHA_THRESHOLD", "131072"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.ConfSources.disableTracking(spark.sparkContext.hadoopConfiguration)
+    val spark = graft.Sessions.engine("graft-profile-query",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), graft.Bench.sessionConfs: _*)
     val maxConc = new java.util.concurrent.atomic.AtomicInteger(0)
     val cur = new java.util.concurrent.atomic.AtomicInteger(0)
     val nTasks = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -11,8 +11,14 @@ class ExtensionsSpec extends AnyFunSuite {
   // create() (not getOrCreate) because another suite's extension-less
   // session may already be the default, and getOrCreate would silently
   // return it, dropping the extensions (order-dependent flake)
+  //
+  // It takes only the codegen settings of Sessions.engineConfs, never its
+  // spark.sql.extensions: the codegen cache is sized once per JVM by
+  // whichever session generates code first, so without them the order
+  // suites run in would decide the forked test JVM's cache size.
   private lazy val extSpark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = Sessions.engineConfs.filter(_._1.startsWith("spark.sql.codegen."))
+      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
       .master("local[2]")
       .appName("graft-ext-test")
       .config("spark.sql.shuffle.partitions", "2")

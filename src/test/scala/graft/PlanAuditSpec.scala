@@ -340,6 +340,28 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(plan.contains("*(1)"), s"q1 fell out of whole-stage codegen:\n$plan")
   }
 
+  test("a repeated multi-stage query compiles nothing, even after 150 other pipelines") {
+    // Sessions sizes Spark's JVM-wide class cache past graft's working
+    // set and drops the AQE stage id from generated class names, so a
+    // plan shape compiled once is never compiled (and JIT-warmed) again
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.functions._
+    assert(spark.conf.get("spark.sql.codegen.useIdInClassName") == "false")
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def joinAgg() = {
+      val facts = spark.range(0, 5000).select((col("id") % 40).as("k"), col("id").as("v"))
+      val dims = spark.range(0, 40).select(col("id").as("k"), (col("id") % 7).as("g"))
+      facts.join(dims, "k").groupBy("g").agg(sum("v").as("s")).collect().toSet
+    }
+    val first = joinAgg()
+    // one distinct literal each, so one distinct generated class each
+    (1 to 150).foreach(i => spark.range(3).selectExpr(s"id * $i + ${i * 7919} AS x").collect())
+    val before = compiles
+    assert(joinAgg() == first)
+    assert(compiles == before,
+      s"re-running the query compiled ${compiles - before} classes again")
+  }
+
   test("delta replay reads push filters into the parquet scans") {
     import spark.implicits._
     // readDelta returns plain parquet scans (possibly unioned per
